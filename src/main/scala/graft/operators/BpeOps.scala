@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+
+import scala.collection.mutable
 
 /** Byte-pair-encoding tokenizer TRAINING (Sennrich, Haddow & Birch,
   * ACL'16 §3.2) — the full count→merge→rewrite loop, not just the one
@@ -13,29 +16,37 @@ import org.apache.spark.sql.functions._
   *
   * Scale discipline (the part that matters at 100 TB):
   *  - The corpus is touched exactly ONCE — the initial distinct-word
-  *    collapse (map-side combinable count). Every iteration after that
-  *    runs on the VOCAB table (distinct words × symbol arrays), whose
-  *    size is bounded by the language, not the corpus (the classic
-  *    BPE-on-vocab optimization; Sennrich's reference implementation
-  *    does the same).
-  *  - Per iteration: one explode→sum aggregate over the vocab for pair
-  *    counts, one ordered `limit(1)` collect for the argmax (a bounded
-  *    metadata action — one (pair, count) row, same discipline as the
-  *    IVF centroid literals), and one rewrite pass. The rewrite is
-  *    guarded by a cheap codegen'd adjacency test (separator-joined
-  *    `contains`) so the interpreted fold lambda only runs on words that
-  *    actually contain the winning pair — in natural corpora that is a
-  *    small and shrinking fraction of the vocab.
-  *  - The vocab is `localCheckpoint`ed every iteration (the Pregel
-  *    lesson: a lazy chain of `merges` rewrite lambdas would stack
-  *    `merges` interpreted HOFs onto one plan and re-execute the whole
-  *    history each round). `reliableEvery` upgrades every k-th
-  *    iteration to a durable checkpoint ([[Ckpt.step]] contract).
+  *    collapse (map-side combinable count), eagerly `localCheckpoint`ed.
+  *    Every iteration after that runs on the VOCAB table (distinct words
+  *    × symbol arrays), whose size is bounded by the language, not the
+  *    corpus (the classic BPE-on-vocab optimization; Sennrich's reference
+  *    implementation does the same).
+  *  - Two regimes, picked by ONE bounded `limit(MaxDriverVocab + 1)`
+  *    collect (one job, one task) of the checkpointed vocab (see
+  *    [[MaxDriverVocab]] for the heap arithmetic):
+  *    - Driver finish (vocab ≤ [[MaxDriverVocab]] words): the collected
+  *      vocab runs the whole count → argmax → rewrite loop as a plain JVM
+  *      loop — the same bounded-metadata discipline as
+  *      [[DedupOps.nearDupClusters]]' `maxDriverEdges` union-find. The
+  *      job count is then constant in `merges` (checkpoint + collect);
+  *      per-round scheduling, re-planning and checkpoints all vanish.
+  *    - Distributed (larger vocab): per iteration, one explode→sum
+  *      aggregate over the vocab for pair counts, one ordered `limit(1)`
+  *      collect for the argmax (one (pair, count) row), and one rewrite
+  *      pass guarded by a cheap codegen'd adjacency test (separator-joined
+  *      `contains`) so the interpreted fold lambda only runs on words
+  *      that actually contain the winning pair. Each generation is
+  *      `localCheckpoint`ed lazily (the Pregel lesson: a lazy chain of
+  *      `merges` rewrite lambdas would re-execute the whole history each
+  *      round) and its parent unpersisted one round late;
+  *      `reliableEvery` upgrades every k-th iteration to a durable
+  *      checkpoint ([[Ckpt.step]] contract).
   *
   * Greedy left-to-right merge semantics within a word (leftmost
   * occurrence first, rescan continues after the fused token) and
-  * count-desc / pair-lexicographic argmax tie-break, so the merge list
-  * is deterministic and engines replaying it agree exactly.
+  * count-desc / pair-lexicographic argmax tie-break (Spark's string
+  * order: UTF-8 bytes, in both regimes), so the merge list is
+  * deterministic and engines replaying it agree exactly.
   *
   * Returns one row per learned merge: (rank, left, right, merged, cnt)
   * with rank 1-based in merge order; stops early if no pair remains. */
@@ -81,29 +92,105 @@ object BpeOps {
       .contains(sep + a + sep + b + sep)
   }
 
+  /** Driver-finish gate: the largest distinct-word vocab whose merge
+    * rounds [[bpeTrain]] runs on the driver. Heap arithmetic per word of
+    * ~10 symbols: the collected symbol array (10 short Strings at ~48 B
+    * plus the array and its freq ≈ 0.5 KB) and at most its 9 adjacent-pair
+    * entries in the round's count map (key tuple, boxed Long and hash node
+    * ≈ 64 B each ≈ 0.6 KB) — about 1 KB, so 2¹⁶ words ≈ 64 MB, the same
+    * driver budget as [[DedupOps.nearDupClusters]]' 2²² edges. Real
+    * vocabularies beyond it (noisy web text has millions of distinct
+    * words) take the distributed loop. */
+  private[graft] val MaxDriverVocab: Int = 1 << 16
+
+  private type Merge = (Int, String, String, String, Long)
+
   def bpeTrain(docs: DataFrame, idCol: String, textCol: String,
-               merges: Int, reliableEvery: Int = 0): DataFrame = {
+               merges: Int, reliableEvery: Int = 0): DataFrame =
+    bpeTrainBounded(docs, textCol, merges, reliableEvery, MaxDriverVocab)
+
+  /** [[bpeTrain]] with an explicit driver-finish gate: vocabs of at most
+    * `maxDriverVocab` words train on the driver, larger ones distributed
+    * (`maxDriverVocab = 0` forces the distributed loop on any non-empty
+    * vocab; the spec runs both and asserts equal merge lists). */
+  private[graft] def bpeTrainBounded(docs: DataFrame, textCol: String,
+                                     merges: Int, reliableEvery: Int,
+                                     maxDriverVocab: Int): DataFrame = {
     require(merges >= 1 && merges <= 100000, s"merges in [1, 1e5], got $merges")
     val spark = docs.sparkSession
     import spark.implicits._
     // ONE corpus pass: distinct-word frequencies, then chars + end mark.
     // Spread the text projection if the scan arrived single-partition
     // (gate parquet = one row group) — the split/HOF work is per-row CPU.
-    val vocab0 = Spread.ifNarrow(docs.select(col(textCol)))
+    val vocab = Spread.ifNarrow(docs.select(col(textCol)))
       .select(explode_outer(TextOps.tokens(col(textCol))).as("w"))
       .filter(col("w").isNotNull && col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .select(concat(
         filter(split(col("w"), ""), s => s =!= ""),
         array(lit(EndMark))).as("syms"), col("freq"))
-    var vocab = vocab0.localCheckpoint()
+      .localCheckpoint()
+    // one job, one task: the coalesce reads the checkpointed partitions in
+    // turn and the limit stops it after maxDriverVocab + 1 rows (a bare
+    // limit-collect scans one partition, then schedules the rest)
+    val head = vocab.coalesce(1).limit(maxDriverVocab + 1).collect()
+    val learned =
+      if (head.length <= maxDriverVocab) {
+        vocab.unpersist(blocking = false)
+        trainOnDriver(
+          head.map(r => (r.getSeq[String](0).toArray, r.getLong(1))), merges)
+      } else trainDistributed(vocab, merges, reliableEvery)
+    learned.toDF("rank", "left", "right", "merged", "cnt")
+  }
+
+  /** Spark's argmax order for the pair counts: count desc, then `l`, then
+    * `r` as UTF-8 bytes (`String.compareTo` orders UTF-16 code units and
+    * disagrees for supplementary-plane symbols). */
+  private val pairOrder: Ordering[((String, String), Long)] =
+    Ordering.by[((String, String), Long), Long](-_._2)
+      .orElseBy(p => UTF8String.fromString(p._1._1))
+      .orElseBy(p => UTF8String.fromString(p._1._2))
+
+  /** The driver-finish regime: the merge loop over a collected vocab of
+    * (symbols, freq) rows, recounting pairs every round. */
+  private def trainOnDriver(vocab0: Array[(Array[String], Long)],
+                            merges: Int): Seq[Merge] = {
+    var vocab = vocab0
+    val learned = mutable.ArrayBuffer.empty[Merge]
+    var exhausted = false
+    while (learned.length < merges && !exhausted) {
+      val counts = mutable.HashMap.empty[(String, String), Long]
+      vocab.foreach { case (syms, freq) =>
+        var j = 0
+        while (j + 1 < syms.length) {
+          val p = (syms(j), syms(j + 1))
+          counts.update(p, counts.getOrElse(p, 0L) + freq)
+          j += 1
+        }
+      }
+      if (counts.isEmpty) exhausted = true
+      else {
+        val ((a, b), cnt) = counts.min(pairOrder)
+        learned += ((learned.length + 1, a, b, a + b, cnt))
+        vocab = vocab.map { case (syms, freq) => (fuse(syms, a, b), freq) }
+      }
+    }
+    learned.toSeq
+  }
+
+  /** The distributed regime: each round aggregates pair counts over the
+    * checkpointed vocab, collects the one top pair and rewrites the vocab
+    * into a lazily checkpointed next generation. Takes ownership of
+    * `vocab0` (unpersists it). */
+  private def trainDistributed(vocab0: DataFrame, merges: Int,
+                               reliableEvery: Int): Seq[Merge] = {
+    var vocab = vocab0
     // previous vocab generation, unpersisted one round LATE: the current
     // generation checkpoints LAZILY (its blocks materialize inside the
     // next round's top-pair collect — one job per round instead of two),
     // so its parent's blocks must outlive it by one collect
     var lagged: DataFrame = null
-    val learned = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, String, String, String, Long)]
+    val learned = mutable.ArrayBuffer.empty[Merge]
     var rank = 1
     var exhausted = false
     while (rank <= merges && !exhausted) {
@@ -137,7 +224,7 @@ object BpeOps {
     }
     if (lagged != null) lagged.unpersist(blocking = false)
     vocab.unpersist(blocking = false)
-    learned.toSeq.toDF("rank", "left", "right", "merged", "cnt")
+    learned.toSeq
   }
 
   /** Apply a learned merge list to new text — the tokenizer ENCODE side:
@@ -169,32 +256,34 @@ object BpeOps {
     mergeList.foldLeft(base) { case (acc, (a, b)) => mergePair(acc, a, b) }
   }
 
+  /** ONE greedy left-to-right fuse pass of adjacent (a, b) into `a + b`
+    * over a plain symbol array — identical pending/flush semantics to
+    * [[mergePair]], shared by the driver-finish trainer and
+    * [[encodeWord]]. O(|syms|); returns `syms` itself when the pair does
+    * not occur. */
+  private def fuse(syms: Array[String], a: String,
+                   b: String): Array[String] =
+    if (syms.length < 2) syms
+    else {
+      val out = new mutable.ArrayBuffer[String](syms.length)
+      var i = 0
+      while (i < syms.length) {
+        if (i + 1 < syms.length && syms(i) == a && syms(i + 1) == b) {
+          out += a + b; i += 2
+        } else { out += syms(i); i += 1 }
+      }
+      if (out.length < syms.length) out.toArray else syms
+    }
+
   /** One word → its BPE symbols under `mergeList`, plain-JVM replay of
     * [[mergeListEncode]]'s fold (chars + [[EndMark]], then each merge in
-    * rank order as ONE greedy left-to-right fuse pass — identical
-    * pending/flush semantics to [[mergePair]], so the two encoders are
-    * spec-checked equal). Each pass is O(|syms|); the fused array is
-    * only reallocated when the pair actually occurred. */
+    * rank order as one [[fuse]] pass), so the two encoders are
+    * spec-checked equal. */
   private[graft] def encodeWord(w: String,
-                                mergeList: Array[(String, String)]): Array[String] = {
-    var syms: Array[String] = w.split("").filter(_.nonEmpty) :+ EndMark
-    var m = 0
-    while (m < mergeList.length) {
-      val (a, b) = mergeList(m)
-      if (syms.length >= 2) {
-        val out = new scala.collection.mutable.ArrayBuffer[String](syms.length)
-        var i = 0
-        while (i < syms.length) {
-          if (i + 1 < syms.length && syms(i) == a && syms(i + 1) == b) {
-            out += a + b; i += 2
-          } else { out += syms(i); i += 1 }
-        }
-        if (out.length < syms.length) syms = out.toArray
-      }
-      m += 1
+                                mergeList: Array[(String, String)]): Array[String] =
+    mergeList.foldLeft(w.split("").filter(_.nonEmpty) :+ EndMark) {
+      case (syms, (a, b)) => fuse(syms, a, b)
     }
-    syms
-  }
 
   /** Row shapes for the bulk encoder's typed pipeline. */
   final case class BpeDocIn(id: Long, grp: String, text: String)

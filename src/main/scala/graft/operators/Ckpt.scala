@@ -30,9 +30,11 @@ object Ckpt {
     * `eager = false` defers materialization to the step's FIRST consumer
     * (the checkpoint blocks are written as a side effect of that job) —
     * right when every superstep is immediately followed by an action
-    * that reads it anyway (the BPE trainer's top-pair collect), halving
-    * the per-step job count. The caller must not unpersist the PREVIOUS
-    * generation until the deferred step has actually materialized. */
+    * that reads it anyway (the top-pair collect of the BPE trainer's
+    * distributed regime; the PageRank, BFS, HITS and Louvain supersteps
+    * in [[GraphOps]]), halving the per-step job count. The caller must
+    * not unpersist the PREVIOUS generation until the deferred step has
+    * actually materialized. */
   def step(df: DataFrame, step: Int, reliableEvery: Int,
            eager: Boolean = true): DataFrame = {
     val reliable = reliableEvery > 0 && step % reliableEvery == 0 &&

@@ -203,11 +203,14 @@ object TokenizerQ {
 
     // Full BPE tokenizer TRAINING (Sennrich ACL'16) — the count→merge→
     // rewrite LOOP that q118's single pair-count step feeds: 25 merge
-    // rounds on the distinct-word vocab (corpus touched once; each round
-    // is one vocab-sized aggregate + one bounded argmax collect + one
-    // guarded rewrite, localCheckpointed — per-iteration plan shape in
-    // BpeOps scaladoc). Deterministic count-desc/lexicographic argmax →
-    // rows-only with BpeSpec pinning the hand-worked Sennrich example
+    // rounds on the distinct-word vocab (corpus touched once, into a
+    // checkpointed vocab). A vocab under BpeOps.MaxDriverVocab (sf0.1's
+    // collapses to a few dozen words) runs all 25 rounds on the driver
+    // after one bounded collect; a larger one runs them distributed, each
+    // round one vocab-sized aggregate + one argmax collect + one guarded,
+    // lazily checkpointed rewrite (both regimes in the BpeOps scaladoc).
+    // Deterministic count-desc/lexicographic argmax → rows-only with
+    // BpeSpec pinning the hand-worked Sennrich example and regime parity,
     // and tools/crosscheck_stats.py replaying the full 25-round loop in
     // independent Python.
     "q301_bpe_train" -> Q(
@@ -673,11 +676,13 @@ object TokenizerQ {
       }),
 
     // Corpus-scale tokenizer ENCODE — the apply half of q301's trained
-    // BPE: the 25 learned merges become a broadcast literal replayed per
-    // word in ONE mapPartitions corpus scan (per-partition word cache;
-    // no join, no shuffle), then per-source fertility with the TRAINED
-    // tokenizer — upgrading q185's whitespace-heuristic fertility to the
-    // number a real tokenizer ships with. Trained-merge-specific →
+    // BPE (trained by the same bpeTrain call, so a small vocab's merge
+    // rounds run on the driver): the 25 learned merges become a broadcast
+    // literal replayed per word in ONE mapPartitions corpus scan
+    // (per-partition word cache; no join, no shuffle), then per-source
+    // fertility with the TRAINED tokenizer — upgrading q185's
+    // whitespace-heuristic fertility to the number a real tokenizer
+    // ships with. Trained-merge-specific →
     // rows-only; BpeSpec pins encoder parity with the composed-expression
     // encode and the python replay re-runs the full train+encode loop.
     "q336_bpe_encode" -> Q(

@@ -1,7 +1,11 @@
 package graft
 
 import graft.operators.BpeOps
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import java.util.concurrent.atomic.AtomicInteger
 
 /** BPE training contracts, pinned against the hand-worked example from
   * Sennrich, Haddow & Birch (ACL'16, §3.2 / fig. 1): the vocabulary
@@ -11,7 +15,8 @@ import org.apache.spark.sql.functions._
   * must produce the classic [low, est</w>] segmentation. Greedy
   * left-to-right merge semantics are pinned on the overlapping-pair
   * corpus ("aaaa": three (a,a) positions but only two non-overlapping
-  * fuses). */
+  * fuses). The driver-finish and distributed regimes must learn the
+  * same merge list on every fixture. */
 class BpeSpec extends SparkSpec {
   import spark.implicits._
 
@@ -110,5 +115,92 @@ class BpeSpec extends SparkSpec {
       .select(col("tokens")).as[Seq[String]].head()
     assert(toks == Seq("low", "est</w>", "low", "est</w>", "low", "est</w>",
       "n", "e", "w", "est</w>"), toks.mkString("|"))
+  }
+
+  /** Merge rows of [[BpeOps.bpeTrainBounded]] in rank order. */
+  private def trainWith(docs: DataFrame, merges: Int, maxDriverVocab: Int) =
+    BpeOps.bpeTrainBounded(docs, "text", merges, reliableEvery = 0,
+        maxDriverVocab = maxDriverVocab)
+      .orderBy("rank")
+      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2),
+        r.getString(3), r.getLong(4))).toSeq
+
+  /** (driver-finish, distributed) merge lists for one fixture. */
+  private def bothRegimes(docs: DataFrame, merges: Int) =
+    (trainWith(docs, merges, BpeOps.MaxDriverVocab), trainWith(docs, merges, 0))
+
+  test("driver finish == distributed loop: Sennrich, overlap, exhaustion") {
+    Seq((corpus("low" -> 5, "lower" -> 2, "newest" -> 6, "widest" -> 3), 20),
+        (corpus("aaaa" -> 1), 3),
+        (corpus("ab" -> 4), 10)).foreach { case (docs, merges) =>
+      val (onDriver, distributed) = bothRegimes(docs, merges)
+      assert(onDriver.nonEmpty)
+      assert(onDriver == distributed,
+        s"\ndriver: ${onDriver.mkString(", ")}\ndistributed: ${distributed.mkString(", ")}")
+    }
+  }
+
+  test("argmax ties break on UTF-8 bytes in both regimes") {
+    // U+FF21 (EF BC A1) sorts BEFORE U+1F600 (F0 9F 98 80) as UTF-8, but
+    // AFTER it as UTF-16 code units (FF21 vs D83D): a String.compareTo
+    // tie-break would learn (x, 😀) first
+    val fw = "\uFF21"
+    val emoji = new String(Character.toChars(0x1F600))
+    val (onDriver, distributed) =
+      bothRegimes(corpus(s"x$fw" -> 1, s"x$emoji" -> 1), merges = 10)
+    assert(onDriver == Seq(
+      (1, "x", fw, s"x$fw", 1L),
+      (2, "x", emoji, s"x$emoji", 1L),
+      (3, s"x$fw", "</w>", s"x$fw</w>", 1L),
+      (4, s"x$emoji", "</w>", s"x$emoji</w>", 1L)), onDriver.mkString(", "))
+    assert(distributed == onDriver, distributed.mkString(", "))
+  }
+
+  /** Jobs started inside `f`, counted by a listener on the job group.
+    * A marker job after `f` flushes the in-order listener bus, so every
+    * job of `f` has been delivered once the marker's start arrives. */
+  private def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"bpe-jobs-${System.nanoTime}"
+    val marker = s"$group-marker"
+    val started = new AtomicInteger
+    @volatile var flushed = false
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.incrementAndGet()
+          case Some(`marker`) => flushed = true
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+      while (!flushed && System.nanoTime < deadline) Thread.sleep(10)
+      assert(flushed, "listener bus did not deliver the marker job")
+    } finally sc.removeSparkListener(listener)
+    started.get
+  }
+
+  test("driver finish: job count is constant in the merge budget") {
+    // two long words leave > 25 mergeable pairs, so neither budget
+    // exhausts early; the small vocab takes the driver-finish regime
+    val docs = corpus("internationalization" -> 3, "counterrevolutionaries" -> 2)
+    def jobs(merges: Int): Int = {
+      var out: DataFrame = null
+      val n = jobsDuring { out = BpeOps.bpeTrain(docs, "doc_id", "text", merges) }
+      assert(out.count() == merges)
+      n
+    }
+    val (j5, j25) = (jobs(5), jobs(25))
+    // the vocab checkpoint (two jobs under AQE, which runs the groupBy's
+    // shuffle stage as its own job) plus the bounded collect; a job per
+    // round would give j25 > j5
+    assert(j5 >= 1 && j25 == j5, s"merges=5: $j5 jobs, merges=25: $j25 jobs")
+    assert(j25 <= 3, s"$j25 jobs")
   }
 }

@@ -36,5 +36,9 @@ while :; do
 done
 echo "loadavg_start: $(cut -d' ' -f1-3 /proc/loadavg)"
 rm -rf "$OUT"
-sbt -error "runMain graft.Verify $SF $OUT"
+# Verify exits 1 when any query threw (named in $OUT/failures.json); the
+# compare still runs so the record covers every query that did dump.
+verify_rc=0
+sbt -error "runMain graft.Verify $SF $OUT" || verify_rc=$?
 python3 tools/check.py "$SF" "$OUT" --json CORRECTNESS_local.json
+exit "$verify_rc"
